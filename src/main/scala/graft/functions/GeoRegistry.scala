@@ -62,6 +62,9 @@ object GeoRegistry {
     if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.SpatialJoinStrategy]))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ new graft.plans.SpatialJoinStrategy(spark)
+    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.BboxScanStrategy]))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ new graft.plans.BboxScanStrategy
     if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.BboxPruningRule]))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ new graft.plans.BboxPruningRule
@@ -92,6 +95,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(session => new graft.plans.SpatialJoinStrategy(session))
     // spatial row-group pruning over GeoParquet bbox covering columns
     ext.injectOptimizerRule(_ => new graft.plans.BboxPruningRule)
+    // ... enforced by the parquet reader only, not by the Filter above it
+    ext.injectPlannerStrategy(_ => new graft.plans.BboxScanStrategy)
     // large-large spatial joins: grid-cell equi-join rewrite instead of BNLJ
     ext.injectOptimizerRule(_ => new graft.plans.GridJoinRule)
   }

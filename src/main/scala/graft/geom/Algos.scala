@@ -537,27 +537,37 @@ object Algos {
     }
   }
 
-  /** Decompose into segment list (packed x1,y1,x2,y2 per segment) + isolated points. */
+  /** Decompose into segment list (packed x1,y1,x2,y2 per segment) + isolated points.
+    * The first walk sizes the two primitive arrays, the second fills them. */
   private def segments(g: Geometry): (Array[Double], Array[Double]) = {
-    val segs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val pts = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def addLine(cs: Array[Double]): Unit = {
-      if (cs.length == 2) { pts += cs(0); pts += cs(1) }
-      var i = 0
-      while (i + 3 < cs.length) {
-        segs += cs(i); segs += cs(i + 1); segs += cs(i + 2); segs += cs(i + 3)
-        i += 2
-      }
+    var segs: Array[Double] = null; var pts: Array[Double] = null
+    var ns = 0; var np = 0
+    def addPoint(x: Double, y: Double): Unit = {
+      if (pts != null) { pts(np) = x; pts(np + 1) = y }
+      np += 2
     }
+    def addLine(cs: Array[Double]): Unit =
+      if (cs.length == 2) addPoint(cs(0), cs(1))
+      else if (cs.length >= 4) {
+        // segment k starts at cs(2k) and lands at segs(ns + 4k)
+        if (segs != null) {
+          var i = 0
+          while (i + 3 < cs.length) { System.arraycopy(cs, i, segs, ns + 2 * i, 4); i += 2 }
+        }
+        ns += 2 * cs.length - 4
+      }
     def go(g: Geometry): Unit = g match {
-      case p: Point if !p.isEmpty => pts += p.x; pts += p.y
+      case p: Point if !p.isEmpty => addPoint(p.x, p.y)
       case l: LineString => addLine(l.coords)
       case p: Polygon    => p.rings.foreach(addLine)
       case m: GeometryCollectionLike => m.geoms.foreach(go)
       case _ =>
     }
     go(g)
-    (segs.toArray, pts.toArray)
+    segs = new Array[Double](ns); pts = new Array[Double](np)
+    ns = 0; np = 0
+    go(g)
+    (segs, pts)
   }
 
   /** 0 = outside, 1 = on boundary, 2 = strictly inside — ray casting w/ boundary test. */
@@ -659,6 +669,12 @@ object Algos {
    */
   def contains(a: Geometry, b: Geometry): Boolean = {
     if (a == null || b == null || a.isEmpty || b.isEmpty) return false
+    (a, b) match {
+      // the point-in-polygon refine of every join and window: one locate
+      // answers it (interior only), with no segment arrays to build
+      case (_: Polygon | _: MultiPolygon, p: Point) => return locate(p.x, p.y, a) == 2
+      case _ =>
+    }
     if (!a.envelope.contains(b.envelope)) return false
     a match {
       case _: Polygon | _: MultiPolygon =>

@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
  * [[graft.plans.BboxPruningRule]]. At 100 TB this is the difference between
  * scanning the world and scanning the tiles the query touches.
  *
- * `write` sorts within partitions by (bbox.xmin, bbox.ymin), which keeps
- * row-group extents reasonably tight; a space-filling-curve sort key would
- * tighten the y-extent further and is a straightforward upgrade.
+ * `write` sorts within partitions by the Hilbert-curve key of each bbox
+ * center, so row groups hold spatially adjacent rows and their extents
+ * stay tight in x and y alike.
  */
 object GeoParquet {
 
