@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Plan-audit main: prints `explain("formatted")` for the named catalog
  * queries (all of them if no args) against SPARK_GRAFT_SF_DIR. Used to
@@ -12,14 +10,8 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "ERROR",
+      Sessions.catalogConfs("32"))
     val names = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
     names.foreach { n =>
       println(s"\n===================== $n =====================")

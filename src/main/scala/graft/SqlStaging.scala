@@ -17,7 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *     by pass-throughs), `localCheckpoint()`s the result, and registers
  *     it as a query-private temp view `__stg_<tag>_<i>`;
  *   - the final text is the original with each staged CTE body replaced
- *     by `SELECT * FROM __stg_<tag>_<i>`.
+ *     by `SELECT * FROM __stg_<tag>_<i>`; once it is analyzed, the views
+ *     are dropped, so a checkpoint lives only as long as the result.
  *
  * Result equivalence is structural: each checkpoint materializes exactly
  * the rows the inlined CTE body would produce (same fragments, same
@@ -110,6 +111,10 @@ private[graft] object SqlStaging {
       shift += repl.length - (be - bs)
       idx += 1
     }
-    spark.sql(cur)
+    // spark.sql analyzes eagerly, so the returned plan holds the
+    // checkpoints themselves; dropping the views lets the blocks go with it
+    val out = spark.sql(cur)
+    (0 until idx).foreach(i => spark.catalog.dropTempView(s"__stg_${tag}_$i"))
+    out
   }
 }

@@ -19,14 +19,7 @@ object Verify {
     // partition-count-agnostic by construction (decimal sums, pinned
     // orders), so more cores only shorten the wall
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus, "WARN", Sessions.catalogConfs(cpus))
     new java.io.File(outDir).mkdirs()
     SparkEntry.init(spark) // fully populate registries before workers start
 
@@ -69,13 +62,14 @@ object Verify {
     confMut.foreach { case (n, f) => dump(n, f) }
 
     // Diagnostic row dump (off by default): SPARK_GRAFT_DUMP=q1,q2 prints
-    // the named queries' FULL Spark-side rows (schema + values, one line
-    // per row) into stdout, so a driver-side artifact tail shows the
+    // the named queries' first `dumpRows` Spark-side rows (schema + values,
+    // one line per row) into stdout, so a driver-side artifact tail shows the
     // actual values behind any hash mismatch instead of just a flag.
     // The r06-r08 q383/q606/q676 hash FAILs took four blind rewrite
     // rounds precisely because no artifact carried the differing values
     // (root cause landed r09: DuckDB HUGEINT widening, see tools/
     // check_oracle.py). Kept as permanent cheap insurance.
+    val dumpRows = 200
     sys.env.get("SPARK_GRAFT_DUMP").foreach { names =>
       names.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
         SparkEntry.queries.get(n) match {
@@ -83,9 +77,12 @@ object Verify {
             try {
               val df = f(spark, sfDir)
               println(s"[dump] $n schema=${df.schema.map(x => x.name + ":" + x.dataType.simpleString).mkString(",")}")
-              df.collect().zipWithIndex.foreach { case (r, i) =>
+              val rows = df.take(dumpRows + 1)
+              rows.take(dumpRows).zipWithIndex.foreach { case (r, i) =>
                 println(s"[dump] $n row$i=${r.toString}")
               }
+              if (rows.length > dumpRows)
+                println(s"[dump] $n truncated: only the first $dumpRows rows are shown")
             } catch { case e: Throwable =>
               println(s"[dump] $n failed: ${e.getMessage}")
             }

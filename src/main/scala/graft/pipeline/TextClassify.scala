@@ -25,9 +25,6 @@ package graft.pipeline
  */
 object TextClassify {
 
-  /** Spark tok CTE body over `documents`. */
-  val sparkTok: String = sparkTokFrom("documents")
-
   /** Spark tok CTE over an arbitrary relation (e.g. a REPARTITION-hinted
     * derived table — the explode+split is the CPU-heavy per-row stage and
     * single-row-group test parquet otherwise runs it in one task). */
@@ -39,11 +36,6 @@ object TextClassify {
        |  SELECT doc_id, lang,
        |    explode(filter(split(lower(trim(text)), '\\\\s+'), x -> x != '')) AS word
        |  FROM $rel WHERE text IS NOT NULL AND lang IS NOT NULL)""".stripMargin
-
-  /** DuckDB tok CTE body over `documents`. */
-  val duckTok: String =
-    """SELECT doc_id, lang, unnest(regexp_extract_all(lower(trim(text)), '\S+')) AS word
-      |FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL""".stripMargin
 
   /**
    * Multinomial naive Bayes with add-1 smoothing: trains on the full
@@ -83,29 +75,6 @@ object TextClassify {
        |FROM pred WHERE rk = 1
        |GROUP BY true_lang, pred_lang
        |ORDER BY true_lang, pred_lang""".stripMargin
-
-  /** Spark positional tokenizer (1-based pos, matching duck subscripts). */
-  val sparkTokPos: String =
-    """SELECT doc_id, p.pos + 1 AS pos, p.word
-      |FROM documents
-      |LATERAL VIEW posexplode(filter(split(lower(trim(text)), '\\s+'), x -> x != '')) p AS pos, word
-      |WHERE text IS NOT NULL""".stripMargin
-
-  /** DuckDB positional tokenizer (generate_subscripts; 1.0 lacks WITH ORDINALITY). */
-  val duckTokPos: String =
-    """SELECT doc_id, generate_subscripts(l, 1) AS pos, l[generate_subscripts(l, 1)] AS word
-      |FROM (SELECT doc_id, regexp_extract_all(lower(trim(text)), '\S+') AS l
-      |      FROM documents WHERE text IS NOT NULL) t""".stripMargin
-
-  /** Spark phrase-text aggregation (order restored via array_sort on (pos, word) structs). */
-  val sparkPhraseAgg: String =
-    """SELECT doc_id, pid,
-      |  array_join(transform(array_sort(collect_list(struct(pos, word))), x -> x.word), ' ') AS phrase
-      |FROM phw GROUP BY doc_id, pid""".stripMargin
-
-  /** DuckDB phrase-text aggregation. */
-  val duckPhraseAgg: String =
-    "SELECT doc_id, pid, string_agg(word, ' ' ORDER BY pos) AS phrase FROM phw GROUP BY doc_id, pid"
 
   /**
    * RAKE keyword extraction (Rose et al. 2010): candidate phrases are

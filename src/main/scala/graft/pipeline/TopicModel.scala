@@ -31,22 +31,6 @@ import org.apache.spark.sql.DataFrame
  */
 object TopicModel {
 
-  /** The engine-specific spellings the init expression needs. */
-  final case class Dialect(md5Int: String => String, cat: Seq[String] => String,
-      strCast: String => String)
-
-  /** Spark SQL spelling (conv/substring/concat/string). */
-  val sparkDialect: Dialect = Dialect(
-    e => s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)",
-    as => s"concat(${as.mkString(", ")})",
-    e => s"cast($e as string)")
-
-  /** DuckDB spelling (hex-literal cast, ||, varchar). */
-  val duckDialect: Dialect = Dialect(
-    e => s"('0x' || substr(md5($e), 1, 15))::BIGINT",
-    as => as.mkString(" || "),
-    e => s"cast($e as varchar)")
-
   private val dec = "decimal(30,12)"
 
   /** 0.5 + (md5_60bit(id:j) mod 1000)/2000 — strictly positive init,
@@ -118,7 +102,7 @@ object TopicModel {
    * the plan exponentially). Exposes `w$iters` and `h$iters`.
    */
   def chainSql(vRel: String, k: Int, iters: Int,
-      d: Dialect = duckDialect, mat: String = "MATERIALIZED"): String = {
+      d: Dialect = Dialect.duckDb, mat: String = "MATERIALIZED"): String = {
     require(k >= 1 && iters >= 1, "k >= 1, iters >= 1")
     val steps = (1 to iters).map { i =>
       hStepCtes(vRel, s"w${i - 1}", s"h${i - 1}", s"h$i", s"a$i", mat) + ",\n" +
@@ -160,7 +144,7 @@ object TopicModel {
     def vw(name: String): String = s"__nmf${run}_$name"
     v.selectExpr(s"cast($docCol as string) AS doc", s"$termCol AS term",
       s"cast($valCol as double) AS val").createOrReplaceTempView(vw("v"))
-    val init = initCtes(vw("v"), k, sparkDialect, "")
+    val init = initCtes(vw("v"), k, Dialect.sparkSql, "")
     matCut(spark.sql(s"WITH $init SELECT doc, j, w FROM w0"))
       .createOrReplaceTempView(vw("w0"))
     matCut(spark.sql(s"WITH $init SELECT j, term, h FROM h0"))

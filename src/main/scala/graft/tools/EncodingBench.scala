@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeoArrow
@@ -18,11 +18,7 @@ import graft.functions.GeoArrow
 object EncodingBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("32", "ERROR", Seq("spark.sql.shuffle.partitions" -> "32"))
     graft.functions.GeoRegistry.register(spark)
 
     val base = spark.read.parquet(s"$sfDir/customer.parquet").selectExpr(

@@ -1,15 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeoArrow
 
 object EncodingExplain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("4", "ERROR")
     graft.functions.GeoRegistry.register(spark)
     val cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
       .selectExpr("c_custkey",

@@ -16,14 +16,8 @@ object ScaleBench {
     val sfDir = args(0)
     val sfxDir = args(1)
     val names = args.drop(2).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "32g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("32", "ERROR", graft.Sessions.catalogConfs("32") :+
+      ("spark.driver.memory" -> sys.env.getOrElse("SPARK_DRIVER_MEM", "32g")))
 
     def once(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -25,13 +25,7 @@ object ScaleData {
     val outDir = args.headOption.getOrElse("/tmp/graft_sfx")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val srcDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("32", "WARN", graft.Sessions.catalogConfs("32"))
 
     def t(name: String): DataFrame = spark.read.parquet(s"$srcDir/$name.parquet")
     def offsetOf(df: DataFrame, key: String): Long =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /**
  * Hot-cell skew proof for the grid-partitioned spatial join
@@ -37,21 +37,18 @@ object SkewBench {
     val scale = args.lift(1).map(_.toInt).getOrElse(10)
     val hotRows = args.lift(2).map(_.toInt).getOrElse(4000)
     val rounds = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "32g"))
+    val spark = graft.Sessions.local("32", "ERROR", Seq(
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.driver.memory" -> sys.env.getOrElse("SPARK_DRIVER_MEM", "32g"),
       // local-bench thresholds: AQE only splits partitions over BOTH
       // skewedPartitionThresholdInBytes and factor (5) x median — at
       // cluster scale the defaults (256m) play the same role
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512k")
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1m",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512k",
       // the grid join exists for the regime where NEITHER side broadcasts;
       // at bench row counts AQE would otherwise convert the cell equi-join
       // to a broadcast join and there would be no shuffle to skew-split
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
 
     /** Extent side (in cells) holding bulk density at ~20 rows/cell: more
       * data covers more area — scaling rows at FIXED extent would grow

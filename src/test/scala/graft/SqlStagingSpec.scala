@@ -48,6 +48,15 @@ class SqlStagingSpec extends AnyFunSuite {
     }
   }
 
+  test("run leaves no staged view behind, and the result still reads the checkpoints") {
+    val df = SqlStaging.run(spark, sql, Seq("base", "agg", "top"), "spec_drop")
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("__stg_spec_drop_"))
+    assert(left.isEmpty, s"staged views left: ${left.mkString(",")}")
+    val expected = spark.sql(sql).collect().map(_.toString).sorted.toSeq
+    assert(df.collect().map(_.toString).sorted.toSeq == expected)
+  }
+
   test("staged plan reads the checkpoint, not the source, in the tail") {
     val df = SqlStaging.run(spark, sql, Seq("base", "agg"), "spec_plan")
     val plan = df.queryExecution.optimizedPlan.toString
